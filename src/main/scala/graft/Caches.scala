@@ -45,13 +45,19 @@ object Caches {
     */
   def pinned(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
-    // the PERSISTED rdd is inside cp's LogicalRDD plan — `cp.rdd` would
-    // be a fresh deserializing wrapper whose unpersist is a no-op
-    org.apache.spark.sql.graftshim.ColumnShim.logicalPlan(cp) match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        synchronized { pinnedRdds += l.rdd }
-      case _ => ()
-    }
+    register(cp)
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+  }
+
+  /** Track a checkpointed frame's storage for [[clearPersisted]]: the
+    * PERSISTED rdd is inside cp's LogicalRDD plan nodes (`cp.rdd` would be
+    * a fresh deserializing wrapper whose unpersist is a no-op). When the
+    * plan is not a bare LogicalRDD, `cp` itself is registered too, so a
+    * frame persisted any other way is still freed rather than leaked.
+    */
+  private[graft] def register(cp: DataFrame): Unit = synchronized {
+    val plan = org.apache.spark.sql.graftshim.ColumnShim.logicalPlan(cp)
+    pinnedRdds ++= plan.collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+    if (!plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) persisted += cp
   }
 }

@@ -48,13 +48,14 @@ object SparkEntry {
     * ONLY: the memo holds the resolved relation (file list + schema —
     * KB-scale metadata); every action still scans the parquet bytes
     * from disk, nothing row-shaped is cached. Stopped sessions drop
-    * their entries (the DirMemo hygiene). ScaleBench scratch dirs are
-    * written once per run before any read, so a memoized listing can
-    * never go stale within a session.
+    * their entries (the DirMemo hygiene). A memoized listing goes stale
+    * if a dir's files are rewritten in the same session:
+    * [[resetSharedCaches]] drops every entry, so a harness that
+    * regenerates a dir resets before reading it again.
     */
   private val tblMemo = scala.collection.mutable.LinkedHashMap
     .empty[(SparkSession, String, String), DataFrame]
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     tblMemo.synchronized {
       tblMemo.filterInPlace { case ((owner, _, _), _) =>
         !owner.sparkContext.isStopped }
@@ -917,11 +918,13 @@ object SparkEntry {
   })
 
   /** Drop the shared serve-once caches (CC, minhash pairs, shingle rows),
-    * freeing their checkpoint blocks — ONLY for harnesses ([[ScaleBench]])
+    * freeing their checkpoint blocks, and the memoized table scans, so the
+    * next read re-lists each dir — ONLY for harnesses ([[ScaleBench]])
     * that must time the REAL per-run cost and guarantee no returned frame
     * is reused after the reset.
     */
   private[graft] def resetSharedCaches(): Unit = {
+    tblMemo.synchronized(tblMemo.clear())
     copurchaseEdgesMemo.reset()
     lpaLabelsMemo.reset()
     lpaWeightedLabelsMemo.reset()

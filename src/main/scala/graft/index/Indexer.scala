@@ -194,21 +194,41 @@ object Indexer {
 
   /** The reference's serving mode (`pyapp.py:30-37`): load the prebuilt
     * on-disk artifacts — never re-index. avgdl comes from the 1-row
-    * scoring_params table; nDocs is one count over the (tiny) doc_lengths
-    * artifact. The idf doubles round-trip Parquet exactly, so scores from
-    * a loaded index are bitwise equal to scores from the built one.
+    * scoring_params table. The idf doubles round-trip Parquet exactly, so
+    * scores from a loaded index are bitwise equal to scores from the built
+    * one.
+    *
+    * Resident mode: when the `term_frequencies` row count passes
+    * [[ResidentIndex.fits]] against `Runtime.maxMemory` (a fixed heap
+    * share, not a setting), the postings, IDF and doc lengths are also
+    * collected once into a [[ResidentIndex]] attached to the result, and
+    * `Search.scoreTerms` / `scoreTermsConjunctive` / `prunedTopK` score it
+    * on the driver without a Spark job; nDocs then comes from its doc array.
+    * The Spark plans still serve a load that does not fit, artifacts the
+    * resident loader rejects (see [[ResidentIndex.load]]), every index from
+    * [[build]] / [[buildFromFlat]], and any `copy` of the result that
+    * swaps one of its scoring tables or avgdl. A loaded index is a snapshot
+    * of write-once artifacts: rewriting the directory does not update it.
     */
   def loadArtifacts(spark: SparkSession, dir: String): IndexTables = {
     def r(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
     val dl = r("doc_lengths")
+    val tf = r("term_frequencies")
+    val idf = r("idf_values")
+    val avgdl = r("scoring_params").head().getDouble(0)
+    val resident =
+      if (ResidentIndex.fits(tf.count(), Runtime.getRuntime.maxMemory))
+        ResidentIndex.load(tf, idf, dl, avgdl)
+      else None
     IndexTables(
       flatWords = r("flat_words"),
       docLengths = dl,
-      termFrequencies = r("term_frequencies"),
-      idfValues = r("idf_values"),
+      termFrequencies = tf,
+      idfValues = idf,
       invertedIndex = r("inverted_index"),
-      nDocs = dl.count(),
-      avgdl = r("scoring_params").head().getDouble(0))
+      nDocs = resident.fold(dl.count())(_.nDocs.toLong),
+      avgdl = avgdl,
+      resident = resident)
   }
 }
 
@@ -220,7 +240,11 @@ final case class DocStat(doc_id: Long, doc_length: Long)
 final case class TermFreq(doc_id: Long, word: String, term_freq: Long)
 final case class IdfRow(word: String, doc_freq: Long, idf: Double)
 
-/** The in-memory handle on a built index (SURVEY.md §1.1 artifact set). */
+/** The in-memory handle on a built index (SURVEY.md §1.1 artifact set).
+  * `resident`, set only by [[Indexer.loadArtifacts]], holds the driver-side
+  * postings that serve queries while this handle keeps the tables they
+  * were built from.
+  */
 final case class IndexTables(
     flatWords: DataFrame,
     docLengths: DataFrame,
@@ -228,7 +252,8 @@ final case class IndexTables(
     idfValues: DataFrame,
     invertedIndex: DataFrame,
     nDocs: Long,
-    avgdl: Double) {
+    avgdl: Double,
+    resident: Option[ResidentIndex] = None) {
   import org.apache.spark.sql.Dataset
 
   def typedDocLengths: Dataset[DocStat] = {

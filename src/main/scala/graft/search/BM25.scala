@@ -31,4 +31,12 @@ object BM25 {
       b: Double = DefaultB): Column =
     idf * (tf * lit(k1 + 1.0)) /
       (tf + lit(k1) * (lit(1.0 - b) + lit(b) * docLength / avgdl))
+
+  /** [[score]] over one posting's values, in the same operation order and
+    * with the same long-to-double widening, so a driver-side scorer gets
+    * the Spark plan's partials bit for bit.
+    */
+  def partial(tf: Double, docLength: Double, idf: Double, avgdl: Double,
+      k1: Double, b: Double): Double =
+    idf * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * docLength / avgdl))
 }

@@ -1,9 +1,10 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-import graft.index.{IndexTables, Indexer}
+import graft.index.{IndexTables, Indexer, ResidentIndex}
 import graft.text.Tokenizer
 
 /** Online query path — the single-plan re-expression of the reference's
@@ -28,6 +29,13 @@ import graft.text.Tokenizer
   * doc_lengths at 100 TB has one row per document and co-shuffles with the
   * filtered TF on doc_id (both sides tiny after term filtering); AQE picks
   * broadcast when the filtered TF side fits.
+  *
+  * Resident serving: an index from [[Indexer.loadArtifacts]] that carries
+  * a [[ResidentIndex]] is scored on the driver instead — the same
+  * partials ([[BM25.partial]]), summed per doc in ascending term-id order,
+  * returned as a local relation in the same schema and (score desc,
+  * doc_id asc) order. A caller's `.limit(k).collect()` folds into that
+  * relation and runs no Spark job.
   */
 object Search {
 
@@ -35,20 +43,23 @@ object Search {
     * Deterministic: ties broken by doc_id ascending.
     */
   def scoreTerms(t: IndexTables, terms: Seq[String], k1: Double = BM25.DefaultK1,
-      b: Double = BM25.DefaultB): DataFrame = {
-    val tfq = t.termFrequencies.filter(col("word").isin(terms: _*))
-    // left joins for fidelity with `pyapp.py:94-95`; on a consistent index
-    // they never produce nulls (every indexed word has an IDF row, every
-    // doc a length row — SURVEY.md §2.4 note), so the optimizer's plan
-    // matches the inner-join one
-    tfq
-      .join(broadcast(t.idfValues.filter(col("word").isin(terms: _*))), Seq("word"), "left")
-      .join(t.docLengths, Seq("doc_id"), "left")
-      .withColumn("partial",
-        BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
-      .groupBy("doc_id")
-      .agg(sum("partial").as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+      b: Double = BM25.DefaultB): DataFrame = residentFor(t, k1, b) match {
+    case Some(r) =>
+      val s = residentSums(r, terms, k1, b)
+      residentFrame(r, s.docs, s.score)
+    case None =>
+      // left joins for fidelity with `pyapp.py:94-95`; on a consistent
+      // index they never produce nulls (every indexed word has an IDF row,
+      // every doc a length row — SURVEY.md §2.4 note), so the optimizer's
+      // plan matches the inner-join one
+      t.termFrequencies.filter(col("word").isin(terms: _*))
+        .join(broadcast(t.idfValues.filter(col("word").isin(terms: _*))), Seq("word"), "left")
+        .join(t.docLengths, Seq("doc_id"), "left")
+        .withColumn("partial",
+          BM25.score(col("term_freq"), col("doc_length"), col("idf"), lit(t.avgdl), k1, b))
+        .groupBy("doc_id")
+        .agg(sum("partial").as("score"))
+        .orderBy(col("score").desc, col("doc_id").asc)
   }
 
   /** CONJUNCTIVE (boolean-AND) scoring: only documents containing
@@ -64,19 +75,24 @@ object Search {
   def scoreTermsConjunctive(t: IndexTables, terms: Seq[String],
       k1: Double = BM25.DefaultK1, b: Double = BM25.DefaultB): DataFrame = {
     val ts = terms.distinct
-    val tfq = t.termFrequencies.filter(col("word").isin(ts: _*))
-    tfq
-      .join(broadcast(t.idfValues.filter(col("word").isin(ts: _*))),
-        Seq("word"), "left")
-      .join(t.docLengths, Seq("doc_id"), "left")
-      .withColumn("partial",
-        BM25.score(col("term_freq"), col("doc_length"), col("idf"),
-          lit(t.avgdl), k1, b))
-      .groupBy("doc_id")
-      .agg(sum("partial").as("score"), count(lit(1)).as("n_terms"))
-      .filter(col("n_terms") === ts.size)
-      .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+    residentFor(t, k1, b) match {
+      case Some(r) =>
+        val s = residentSums(r, ts, k1, b)
+        residentFrame(r, s.docs.filter(s.hits(_) == ts.size), s.score)
+      case None =>
+        t.termFrequencies.filter(col("word").isin(ts: _*))
+          .join(broadcast(t.idfValues.filter(col("word").isin(ts: _*))),
+            Seq("word"), "left")
+          .join(t.docLengths, Seq("doc_id"), "left")
+          .withColumn("partial",
+            BM25.score(col("term_freq"), col("doc_length"), col("idf"),
+              lit(t.avgdl), k1, b))
+          .groupBy("doc_id")
+          .agg(sum("partial").as("score"), count(lit(1)).as("n_terms"))
+          .filter(col("n_terms") === ts.size)
+          .select(col("doc_id"), col("score"))
+          .orderBy(col("score").desc, col("doc_id").asc)
+    }
   }
 
   /** Top-k (doc_id, score) for a free-text query over a (doc_id, text)
@@ -173,7 +189,26 @@ object Search {
     */
   def prunedTopK(t: IndexTables, bounds: DataFrame, terms: Seq[String],
       k: Int = 10, k1: Double = BM25.DefaultK1,
-      b: Double = BM25.DefaultB): DataFrame = {
+      b: Double = BM25.DefaultB): DataFrame = residentFor(t, k1, b) match {
+    case Some(r) =>
+      // exact scores of every matching doc, rounded as Spark's round(_, 4)
+      // rounds, then the top k: the result MaxScore pruning is proven to
+      // equal, without reading `bounds`
+      if (!terms.exists(r.termId(_) >= 0)) noHits(t)
+      else {
+        val s = residentSums(r, terms, k1, b)
+        s.docs.foreach(d => s.score(d) = round4(s.score(d)))
+        residentFrame(r, s.docs, s.score, k)
+      }
+    case None => sparkPrunedTopK(t, bounds, terms, k, k1, b)
+  }
+
+  /** The empty (doc_id, score) result of a query with no indexed term. */
+  private def noHits(t: IndexTables): DataFrame =
+    t.docLengths.select(col("doc_id"), lit(0.0).as("score")).limit(0)
+
+  private def sparkPrunedTopK(t: IndexTables, bounds: DataFrame, terms: Seq[String],
+      k: Int, k1: Double, b: Double): DataFrame = {
     def finish(scored: DataFrame): DataFrame = scored
       .withColumn("score", round(col("score"), 4))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -183,8 +218,7 @@ object Search {
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     // terms with no posting (not in the index) contribute nothing
     val present = terms.filter(ubs.contains)
-    if (present.isEmpty)
-      return t.docLengths.select(col("doc_id"), lit(0.0).as("score")).limit(0)
+    if (present.isEmpty) return noHits(t)
     def fullScore(candidates: DataFrame): DataFrame =
       t.termFrequencies.filter(col("word").isin(present: _*))
         // no join hint: the candidate side shrinks with term selectivity
@@ -208,6 +242,67 @@ object Search {
       .filter(col("word").isin(essential: _*))
       .select("doc_id").distinct()
     finish(fullScore(candidates))
+  }
+
+  /** The resident postings of `t` when they may score this call: attached
+    * by [[Indexer.loadArtifacts]], built from exactly `t`'s tables, and
+    * k1 ≥ 0, 0 ≤ b ≤ 1 — the range where every BM25 denominator is
+    * positive (a zero one is null in Spark and has no driver twin).
+    */
+  private def residentFor(t: IndexTables, k1: Double, b: Double): Option[ResidentIndex] =
+    t.resident.filter(r => r.servesFor(t) && k1 >= 0 && b >= 0 && b <= 1)
+
+  /** Per-doc sums over one query: `docs` lists the doc ordinals touched,
+    * `score` and `hits` (matched postings, the plans' count(*)) are
+    * indexed by ordinal.
+    */
+  private final class Sums(val docs: Array[Int], val score: Array[Double], val hits: Array[Int])
+
+  /** The driver twin of TF ⋈ idf ⋈ doc_lengths → Σ partial per doc, over
+    * the postings of the distinct known `terms`, added in ascending
+    * term-id order.
+    */
+  private def residentSums(r: ResidentIndex, terms: Seq[String], k1: Double,
+      b: Double): Sums = {
+    val ids = terms.map(r.termId).filter(_ >= 0).distinct.sorted
+    val score = new Array[Double](r.nDocs)
+    val hits = new Array[Int](r.nDocs)
+    val docs = Array.newBuilder[Int]
+    for (id <- ids) {
+      val idf = r.idf(id)
+      var p = r.postStart(id)
+      val end = r.postStart(id + 1)
+      while (p < end) {
+        val d = r.postDoc(p)
+        if (hits(d) == 0) docs += d
+        score(d) += BM25.partial(r.postTf(p), r.docLen(d), idf, r.avgdl, k1, b)
+        hits(d) += 1
+        p += 1
+      }
+    }
+    new Sums(docs.result(), score, hits)
+  }
+
+  /** Spark's `round(x, 4)` on a double: HALF_UP on its shortest decimal
+    * string.
+    */
+  private def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** The first `k` of `docs` by (score desc, doc_id asc) as a local
+    * (doc_id, score) relation with the Spark plans' schema. Doc ordinals
+    * follow doc_id, so they break ties.
+    */
+  private def residentFrame(r: ResidentIndex, docs: Array[Int], score: Array[Double],
+      k: Int = Int.MaxValue): DataFrame = {
+    val ranked = docs.sortWith { (x, y) =>
+      if (score(x) != score(y)) score(x) > score(y) else x < y
+    }
+    val rows = new java.util.ArrayList[Row](math.min(k, ranked.length))
+    ranked.iterator.take(k).foreach(d => rows.add(Row(r.docIds(d), score(d))))
+    r.termFrequencies.sparkSession.createDataFrame(rows,
+      StructType(Seq(r.docIdField, StructField("score", DoubleType))))
   }
 
   /** F6: truncate-with-ellipsis, native expressions (`pyapp.py:116-117`). */

@@ -36,6 +36,23 @@ class DirMemoSpec extends AnyFunSuite with SparkSpec {
     memo.reset()
   }
 
+  test("resetSharedCaches drops memoized table scans, so a rewritten dir is re-listed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tblmemo").toString
+    def write(n: Int): Unit =
+      spark.range(n).toDF("id").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    write(1)
+    val first = SparkEntry.tbl(spark, dir, "t")
+    assert(first.count() == 1)
+    write(3)
+    // within a session the memo serves the frame it resolved first, file
+    // listing included
+    assert(SparkEntry.tbl(spark, dir, "t") eq first)
+    SparkEntry.resetSharedCaches()
+    val fresh = SparkEntry.tbl(spark, dir, "t")
+    assert(!(fresh eq first))
+    assert(fresh.count() == 3)
+  }
+
   test("ShingledRows tag mismatch fails loudly (r6 ADVICE)") {
     import spark.implicits._
     val docs = Seq((1L, "merge join table scan index")).toDF("doc_id", "text")
